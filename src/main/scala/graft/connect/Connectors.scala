@@ -243,24 +243,6 @@ object Csv {
   }
 }
 
-object ParquetIO {
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Run SQL over a parquet file via a temp view (reference:
-    * Raptor.py:89-101). */
-  def sqlOver(spark: SparkSession, path: String, view: String, sql: String): DataFrame = {
-    spark.read.parquet(path).createOrReplaceTempView(view)
-    spark.sql(sql)
-  }
-
-  def write(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite,
-            partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-}
-
 /** Columnar/line formats beyond the reference's CSV/parquet surface:
   * ORC (the other splittable columnar format a lake migration meets) and
   * JSON-lines (the interchange format most crawl/annotation feeds arrive

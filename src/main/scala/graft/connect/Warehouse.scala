@@ -1,6 +1,7 @@
 package graft.connect
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.core.Tables
 
 /** The reference's two-layer snapshot warehouse (SURVEY §1.1) as a
   * storage-agnostic surface: `{entity}_pre` staging replaced per run,
@@ -111,6 +112,12 @@ final class ParquetWarehouse(root: String,
       .parquet(historyPath(entity))
   }
 
+  /** The current staging snapshot: `_CURRENT`'s version directory, read
+    * through [[graft.core.Tables.readParquet]] — the schema comes from one
+    * footer, read on the driver with Spark's own converter and session
+    * conf, so no Spark job starts; Spark's inference is kept for the
+    * fallback cases (a never-written entity's `PATH_NOT_FOUND` among
+    * them). */
   def readStaging(spark: SparkSession, entity: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val base = stagingPath(entity)
@@ -122,13 +129,19 @@ final class ParquetWarehouse(root: String,
       val version =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
         finally in.close()
-      spark.read.parquet(s"$base/$version")
+      Tables.readParquet(spark, s"$base/$version")
     } else
       // never-written entity: same PATH_NOT_FOUND analysis error a plain
       // staging read raises (the gate-abort spec relies on it)
-      spark.read.parquet(base)
+      Tables.readParquet(spark, base)
   }
 
+  /** The whole history, `day_dt` last as a partition column, read
+    * through [[graft.core.Tables.readParquet]]: the data schema comes from
+    * one footer (the first day's first file), read on the driver with
+    * Spark's own converter and session conf, so no Spark job starts;
+    * Spark still discovers the partitions, and its inference is kept
+    * for the fallback cases. */
   def readHistory(spark: SparkSession, entity: String): DataFrame =
-    spark.read.parquet(historyPath(entity))
+    Tables.readParquet(spark, historyPath(entity))
 }

@@ -51,6 +51,27 @@ object Caches {
     toDrop.foreach(_.foreach(_.unpersist()))
   }
 
+  /** Evaluate `body`, then unpersist the frames tracked for `spark` while
+    * it ran — for a caller that consumes an operator's result entirely
+    * inside `body` (a write, a count), so its internal persists can go
+    * without touching frames tracked before. Runs on failure too. */
+  def releasing[T](spark: SparkSession)(body: => T): T = {
+    val before = synchronized {
+      tracked.get(spark).fold(Set.empty[Dataset[_]])(_.toSet)
+    }
+    try body
+    finally {
+      val added = synchronized {
+        tracked.get(spark).fold(Seq.empty[Dataset[_]]) { buf =>
+          val fresh = buf.filterNot(before).toSeq
+          buf --= fresh
+          fresh
+        }
+      }
+      added.foreach(_.unpersist())
+    }
+  }
+
   /** Number of live tracked frames for `spark` (spec hook). */
   def liveCount(spark: SparkSession): Int = synchronized {
     tracked.get(spark).map(_.size).getOrElse(0)

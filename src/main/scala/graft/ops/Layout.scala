@@ -149,7 +149,7 @@ object Layout {
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(src).getLength
     val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(srcPath).coalesce(files)
+    Tables.readParquet(spark, srcPath).coalesce(files)
       .write.mode(SaveMode.Overwrite).parquet(destPath)
     files.toLong
   }
@@ -165,7 +165,7 @@ object Layout {
     * driver traffic is the audit rows, not the footers. */
   def rowGroups(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val files = spark.read.parquet(path).inputFiles.toSeq
+    val files = Tables.readParquet(spark, path).inputFiles.toSeq
     spark.createDataset(files)
       .repartition(math.max(1, math.min(files.size, 32))) // 0 files ⇒ empty frame, not IAE
       .mapPartitions { fs =>

@@ -418,7 +418,7 @@ object Similarity {
     * rebuild, bit-identical to [[ivfTopK]] on the same corpus
     * (spec-gated equivalence). */
   def ivfTopKFromSaved(spark: SparkSession, path: String): DataFrame = {
-    val loaded = spark.read.parquet(path)
+    val loaded = Tables.readParquet(spark, path)
     val cents = loaded.select(max(col("cents"))).head().getInt(0)
     ivfTopKFrom(loaded.drop("cents"), probeHi(cents))
   }

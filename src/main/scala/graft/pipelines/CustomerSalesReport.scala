@@ -2,7 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{RunDate, Tables}
+import graft.core.{Caches, RunDate, Tables}
 import graft.ops.{Exp, Jnr}
 
 /** Customer-sales-report mart
@@ -86,11 +86,10 @@ object CustomerSalesReport {
     // recomputing the dimension joins or caching the wide detail frame
     // (at 100 TB a pruned re-scan beats persisting detail). sale_amount
     // is already rounded to cents — accumulate as DECIMAL(18,2), exact on
-    // both engines.
-    val agg = sales.groupBy(col("o_custkey").as("customer_id"))
+    // both engines. Tracked, so Caches.release frees it.
+    val agg = Caches.track(sales.groupBy(col("o_custkey").as("customer_id"))
       .agg(sum(col("sale_amount").cast("decimal(18,2)")).cast("double")
-        .as("agg_sales_amount"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .as("agg_sales_amount")))
 
     // Exact quantile thresholds as a percentile AGGREGATE over the (small,
     // persisted) customer-level rollup, broadcast-cross-joined back — one

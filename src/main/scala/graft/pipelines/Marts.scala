@@ -2,7 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.connect.Warehouse
-import graft.core.RunDate
+import graft.core.{Caches, RunDate}
 import graft.ops.Exp
 import graft.validate.Validator
 
@@ -31,20 +31,23 @@ object Marts {
 
   /** Materialize one mart snapshot. The duplicate gate runs on
     * (keys, day_dt) BEFORE the append, exactly like every reference call
-    * site. Returns the snapshot row count. */
+    * site. Returns the snapshot row count. The frames the build persists
+    * are released once the snapshot is appended, so a backfill over N
+    * dates leaves no cache entries behind. */
   def materialize(spark: SparkSession, dir: String, mart: Mart,
-                  runDate: RunDate, warehouse: Warehouse): Long = {
-    val df = mart.build(spark, dir)
-    val stamped =
-      if (df.columns.contains("day_dt")) df
-      else Exp.stampDayDt(df, runDate)
-    val snapshot = stamped.persist()
-    try {
-      Validator.requireUnique(snapshot, mart.keys :+ "day_dt")
-      warehouse.appendHistory(snapshot, mart.name)
-      snapshot.count()
-    } finally snapshot.unpersist()
-  }
+                  runDate: RunDate, warehouse: Warehouse): Long =
+    Caches.releasing(spark) {
+      val df = mart.build(spark, dir)
+      val stamped =
+        if (df.columns.contains("day_dt")) df
+        else Exp.stampDayDt(df, runDate)
+      val snapshot = stamped.persist()
+      try {
+        Validator.requireUnique(snapshot, mart.keys :+ "day_dt")
+        warehouse.appendHistory(snapshot, mart.name)
+        snapshot.count()
+      } finally snapshot.unpersist()
+    }
 
   /** Run all marts for one load date (the reference DAG's mart segment:
     * supplier_perf >> product_perf >> csr, metamorph_etl_dag.py:49). */

@@ -2,7 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 import graft.ops.{Exp, Jnr, Rnk}
 
 /** Supplier-performance mart (reference: m_supplier_performance_task.py:11-239),
@@ -63,9 +63,8 @@ object SupplierPerformance {
     // the product rollup feeds BOTH the supplier re-rollup and the top-1
     // ranking branch — persist at the cut (it is dimension-sized: one row
     // per (supplier, part) pair with sales) so the fact-table join+agg
-    // pipeline runs once
-    val prod = productLevel(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // pipeline runs once; tracked, so Caches.release frees it
+    val prod = Caches.track(productLevel(spark, dir))
 
     // AGG supplier level — re-rollup of the product rollup (reference: A2,
     // m_supplier_performance_task.py:133-141).

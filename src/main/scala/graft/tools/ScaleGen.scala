@@ -46,7 +46,7 @@ object ScaleGen {
   }
 
   def generate(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = graft.core.Tables.load(spark, src, t)
     def write(t: String, df: DataFrame): Unit = {
       df.write.mode(SaveMode.Overwrite).parquet(s"$dst/$t.parquet")
       println(s"wrote $t")

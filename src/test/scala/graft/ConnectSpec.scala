@@ -107,6 +107,21 @@ class ConnectSpec extends SparkSpec {
       counts("supplier_performance"))
   }
 
+  test("building a mart starts no Spark job") {
+    for (m <- graft.pipelines.Marts.all)
+      assert(jobsDuring(m.build(spark, sf)) == 0, m.name)
+    graft.core.Caches.release(spark)
+  }
+
+  test("backfilled marts leave no cached frames behind") {
+    graft.core.Caches.release(spark)
+    spark.catalog.clearCache()
+    val wh = new ParquetWarehouse(tmpDir("graft_marts_cache"))
+    graft.pipelines.Backfill.marts(spark, sf, "2024-06-01", "2024-06-03", wh)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(graft.core.Caches.liveCount(spark) == 0)
+  }
+
   test("mart gate catches the corpus's planted duplicate sale keys") {
     // the synthetic corpus contains duplicate (orderkey, linenumber)
     // pairs by design — a SALE_ID-only snapshot key must abort the load

@@ -8,6 +8,26 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` starts, counted by job group. A marker job runs in
+    * the same group after `body`; the listener bus delivers events in
+    * order, so once the marker is visible every earlier job of the group
+    * is too. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "jobs started by a spec body")
+    try { body; sc.parallelize(Seq(1), 1).count() }
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    var ids = sc.statusTracker.getJobIdsForGroup(group)
+    while (ids.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(20)
+      ids = sc.statusTracker.getJobIdsForGroup(group)
+    }
+    assert(ids.nonEmpty, "the marker job never reached the status tracker")
+    ids.length - 1
+  }
 }
 
 object SparkSpec {
